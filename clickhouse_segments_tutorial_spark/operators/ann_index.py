@@ -70,6 +70,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.catalog import read_parquet
 from .pq import (
     _centroid_df,
     pq_encode,
@@ -465,7 +466,7 @@ def ivfadc_compact_index(spark: SparkSession, workdir: str) -> dict:
     # fine for an offline fold
     idc = meta["id_col"]
     n_live = (
-        spark.read.parquet(codes_path(workdir, slot))
+        read_parquet(spark, codes_path(workdir, slot))
         .select(idc)
         .distinct()
         .count()
@@ -568,7 +569,7 @@ class IncrementalAnnIndexer:
                 if wave_id is not None
                 else int(meta["next_slot"]) - 1
             )
-        return self.spark.read.parquet(codes_path(self.workdir, int(slot)))
+        return read_parquet(self.spark, codes_path(self.workdir, int(slot)))
 
     def probe(self, embeddings: DataFrame, probe: list[float], **kw) -> DataFrame:
         return ivfadc_probe_index(embeddings, self.workdir, probe, **kw)

@@ -41,6 +41,8 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -166,8 +168,14 @@ def _dec_array_lit(vals: list[float]) -> Column:
     driver-side query-BUILD time (the r18 probe regression). The
     double literal (repr round-trips exactly) cast element-wise to
     decimal(18,6) is the identical Cast the per-element form produced,
-    so every score stays bit-identical."""
-    body = ", ".join(repr(float(v)) + "D" for v in vals)
+    so every score stays bit-identical. A non-finite entry has no
+    DECIMAL value (and ``inf``/``nan`` are not SQL literals), so it is
+    rejected here rather than as a parse error."""
+    vals = [float(v) for v in vals]
+    bad = [v for v in vals if not math.isfinite(v)]
+    if bad:
+        raise ValueError(f"non-finite codebook entry {bad[0]!r}")
+    body = ", ".join(repr(v) + "D" for v in vals)
     return F.expr(f"CAST(array({body}) AS ARRAY<DECIMAL(18,6)>)")
 
 

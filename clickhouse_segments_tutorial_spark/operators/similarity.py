@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.catalog import read_parquet
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns (accumulated in double)."""
@@ -627,7 +629,7 @@ def ivf_probe_index(
         )
     probe_lists = ivf_probe_lists(centroids, probe, n_probe, portable=portable)
 
-    cand = spark.read.parquet(path).filter(F.col("ivf_list").isin(probe_lists))
+    cand = read_parquet(spark, path).filter(F.col("ivf_list").isin(probe_lists))
     if exclude_id is not None:
         cand = cand.filter(F.col(id_col) != exclude_id)
     if spill > 1:
@@ -683,7 +685,7 @@ def ivf_recall_curve(
             *[x for i, l in enumerate(plists) for x in (F.lit(l), F.lit(i + 1))]
         )
         probe_col = F.array(*[F.lit(float(x)) for x in probe])
-        scan = spark.read.parquet(path)
+        scan = read_parquet(spark, path)
         if exclude_ids is not None and exclude_ids[pi] is not None:
             # sample probes drawn from the corpus exclude themselves, like
             # every *_topk operator's exclude_id
@@ -780,7 +782,7 @@ def srp_probe_index(
     if len(probe) != meta["dim"]:
         raise ValueError(f"probe dim {len(probe)} != index dim {meta['dim']}")
     probe_words = srp_signature_py(probe, _plane_signs(meta["dim"], meta["n_planes"]))
-    sigs = spark.read.parquet(os.path.join(path, "signatures"))
+    sigs = read_parquet(spark, os.path.join(path, "signatures"))
     if exclude_id is not None:
         sigs = sigs.filter(F.col(id_col) != exclude_id)
     n = sigs.count()
@@ -791,7 +793,7 @@ def srp_probe_index(
         .limit(k_cand)
         .select(id_col)
     )
-    vectors = spark.read.parquet(os.path.join(path, "vectors"))
+    vectors = read_parquet(spark, os.path.join(path, "vectors"))
     probe_col = F.array(*[F.lit(float(x)) for x in probe])
     return (
         vectors.join(F.broadcast(cand), id_col, "left_semi")

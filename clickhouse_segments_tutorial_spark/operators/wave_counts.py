@@ -46,6 +46,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.catalog import read_parquet
+
 
 class WaveCountState:
     """Bucketed wave-tagged count table with replay-safe reads.
@@ -102,7 +104,7 @@ class WaveCountState:
         resume probe may number past this wave) and return a reader."""
         res_path = os.path.join(self.workdir, f"wave_{wave}")
         audit.write.mode("overwrite").parquet(res_path)
-        return self.spark.read.parquet(res_path)
+        return read_parquet(self.spark, res_path)
 
     def append(self, delta: DataFrame, wave: int) -> None:
         """Append one wave's per-key delta rows under wave tag ``wave``."""

@@ -32,7 +32,7 @@ from ..operators.corpus_stats import ngram_novelty
 from ..operators.sampling import deterministic_shuffle, quota_by_group
 from ..operators.similarity import semantic_dedup
 from ..operators.text import chunk_documents, token_count
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .llm import (
     _COS_PAIRS_LSH_ORACLE,
     _JACCARD_ORACLE,
@@ -259,7 +259,7 @@ class IncrementalNoveltyScorer:
         # wave k+2 reads wave k's file list and misses wave k+1's grams
         # (caught by the 3-wave streaming gate test).
         self.spark.catalog.refreshTable(self._tbl)
-        return self.spark.read.parquet(res_path)
+        return read_parquet(self.spark, res_path)
 
     def compact(self) -> None:
         """Fold the per-wave appended files back to ONE sorted file per
@@ -789,7 +789,7 @@ class IncrementalSemanticDeduper:
         res_path = os.path.join(self.workdir, f"wave_{self._wave}")
         if first is None:  # empty wave: no-op
             embeddings.select("vec_id", "label").write.mode("overwrite").parquet(res_path)
-            return self.spark.read.parquet(res_path)
+            return read_parquet(self.spark, res_path)
         dim = int(first.d)
         wave_keys = srp_banded_keys(
             embeddings, dim=dim, n_planes=self.n_planes, max_hamming=self.max_hamming
@@ -876,7 +876,7 @@ class IncrementalSemanticDeduper:
             # cross-session write visibility under foreachBatch — see
             # IncrementalNoveltyScorer.ingest's refresh comment
             self.spark.catalog.refreshTable(self._tbl(name))
-        return self.spark.read.parquet(res_path)
+        return read_parquet(self.spark, res_path)
 
     def compact(self) -> None:
         """Fold each state table to one sorted file per bucket (the
@@ -1256,7 +1256,7 @@ class IncrementalMinHashDeduper:
                 align=True,
             )
             self.spark.catalog.refreshTable(self._tbl(name))
-        return self.spark.read.parquet(res_path)
+        return read_parquet(self.spark, res_path)
 
     def compact(self) -> None:
         import os

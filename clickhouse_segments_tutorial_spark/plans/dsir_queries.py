@@ -34,7 +34,7 @@ from ..operators.dsir import (
 )
 from ..operators.quality_nb import DEFAULT_BUCKETS, hash_bucket
 from ..operators.text import quality_score
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .pipeline import _toks
 from .quality_nb_queries import (
     NB_LABEL_MIN_QUALITY,
@@ -396,7 +396,7 @@ class DSIRResampleIngestor:
             admitted.write.mode("overwrite").parquet(path)
         finally:
             feats.unpersist()
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     def compact(self) -> None:
         self.tr.compact()

@@ -68,6 +68,7 @@ from ..sources import (
     compact_bucketed,
     heal_bucketed_from_pins,
     load_table,
+    read_parquet,
     resolve_wave_counter,
     state_table_prefix,
     write_bucketed,
@@ -167,7 +168,7 @@ class IncrementalCorpusCurator:
         eval_path = os.path.join(workdir, "eval_grams")
         if not os.path.exists(eval_path):
             eval_grams.select("_g").distinct().write.parquet(eval_path)
-        self.eval_grams = spark.read.parquet(eval_path)
+        self.eval_grams = read_parquet(spark, eval_path)
 
     # -- state plumbing --------------------------------------------------
 
@@ -212,7 +213,7 @@ class IncrementalCorpusCurator:
             raise ValueError(f"{name} is not wave-tagged state")
         p = self._path(name)
         if os.path.exists(p):
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         return self.spark.createDataFrame([], _STATE_SCHEMAS[name])
 
     def _append(self, df: DataFrame, name: str, *, wave: int | None = None) -> None:
@@ -331,7 +332,7 @@ class IncrementalCorpusCurator:
         appended, or lazy lineage would re-read the grown state."""
         p = os.path.join(self.workdir, "tmp", f"w{self._wave}_{name}")
         df.write.mode("overwrite").parquet(p)
-        return self.spark.read.parquet(p)
+        return read_parquet(self.spark, p)
 
     # -- ingest ----------------------------------------------------------
 
@@ -532,7 +533,7 @@ class IncrementalCorpusCurator:
         # returned reader survives drop_dedup_state (curated/ is kept)
         out_path = os.path.join(self._path("curated"), f"w{wid}")
         accepted.write.mode("overwrite").parquet(out_path)
-        return self.spark.read.parquet(out_path)
+        return read_parquet(self.spark, out_path)
 
     def delete(self, docs: DataFrame) -> None:
         """Retract docs from the CURATED OUTPUT — the takedown

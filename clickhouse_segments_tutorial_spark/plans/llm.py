@@ -66,7 +66,7 @@ from ..operators.text import (
     token_count,
     top_ngrams,
 )
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .registry import QuerySpec
 
 
@@ -755,7 +755,7 @@ def cluster_balanced_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ivf_list").cast("int").alias("cluster"),
         F.md5(F.col("vec_id").cast("string")).alias("_ord"),
     ).write.parquet(asg_path)
-    assigned = spark.read.parquet(asg_path)
+    assigned = read_parquet(spark, asg_path)
     gate = StreamingQuotaGate(
         spark,
         workdir,

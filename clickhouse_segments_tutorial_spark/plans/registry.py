@@ -61,63 +61,14 @@ class QuerySpec:
 # the driver window regardless of how broad the auto-derivation went.
 # Reset to the new round's names (or empty) each round.
 # Names that MUST receive a driver correctness row THIS round, ahead of
-# even the union-deadline block: the r17 VERDICT names them with
-# explicit done-criteria ("Done = top_parts_per_returnflag_topkw
-# hash-green in the driver's correctness run"; item 7: "ensure
-# unigram_pieces_docs, dsir_weights_docs, bigram_lm_nll_docs,
-# corpus_pipeline_docs are sampled next round"). At the r18 record
-# state the deadline block holds 43 names, so the plain override sorts
-# to positions 43+ and topkw lands OUTSIDE the 50-row window — the one
-# standing RED cell would never get its clearing hash row. This tier is
-# for such hard per-round obligations ONLY and must stay small: each
-# name can displace a deadline name from the window once the deadline
-# backlog exceeds window - len(must). At r18: 43 + 5 = 48 <= 50, so
-# promoting these five costs zero union coverage. Reset each round.
-ROUND_MUST_SAMPLE: frozenset[str] = frozenset({
-    "top_parts_per_returnflag_topkw",
-    "unigram_pieces_docs",
-    "dsir_weights_docs",
-    "bigram_lm_nll_docs",
-    "corpus_pipeline_docs",
-})
+# even the union-deadline block (e.g. a standing red cell whose clearing
+# hash row would otherwise sort outside the window). This tier is for
+# such hard per-round obligations ONLY and must stay small: each name
+# can displace a deadline name from the window once the deadline
+# backlog exceeds window - len(must). Reset each round.
+ROUND_MUST_SAMPLE: frozenset[str] = frozenset()
 
-ROUND_TOUCHED_OVERRIDE: frozenset[str] = frozenset({
-    # r18: the r17 optimization session rewrote these paths (local
-    # trainer gates, one-pass DSIR, map-only bigrams, pipeline barriers)
-    # but none landed in the r17 correctness sample, and the edits
-    # predate the r17 round-artifact commit so git-diff pinning cannot
-    # see them — pin explicitly so the driver re-verifies them (r17
-    # VERDICT "Next round" item 7).
-    "unigram_pieces_docs",
-    "dsir_weights_docs",
-    "bigram_lm_nll_docs",
-    "corpus_pipeline_docs",
-    # r18: the ONLY red r17 cell — hash_match false on an oracle-typing
-    # artifact (HUGEINT sum -> float64 through the driver's pandas
-    # fetch; fixed in relational.py this round). Its r17 row counts as
-    # "green" for staleness (rows_match, no err), so without the pin the
-    # fixed oracle would not get a fresh driver hash row this round.
-    "top_parts_per_returnflag_topkw",
-    # r18 session 2: queries whose internals this round's optimizer
-    # rewrote (ADC literal-array emission, cascade write/overlap
-    # restructure, MinHash expr-string signatures, novelty fold,
-    # bigram single-persist). The auto-derivation pinned 182/184
-    # queries (dedup.py's closure reaches nearly every module), which
-    # collapses the pinned block back into staleness order — several of
-    # these were green in the r17 sample and would sort LAST; pin them
-    # to the guaranteed front so the driver re-hashes exactly the
-    # changed paths.
-    "ann_ivfadc_probe",
-    "ann_ivfadc_residual_topk",
-    "ann_quantized_topk",
-    "segment_microbatch_members",
-    "segment_eventtime_members",
-    "segment_bucketed_members",
-    "segment_eventtime_members_streaming",
-    "minhash_near_dup_pairs",
-    "novelty_ngram_docs",
-    "bigram_lm_nll_lifecycle",
-})
+ROUND_TOUCHED_OVERRIDE: frozenset[str] = frozenset()
 
 
 def _query_modules() -> tuple:

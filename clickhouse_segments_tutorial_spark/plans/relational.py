@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..operators.asof_join import asof_join
 from ..operators.funnel import funnel_levels, funnel_levels_exact
 from ..operators.sessionize import session_stats
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .registry import QuerySpec
 
 
@@ -1218,7 +1218,7 @@ def summing_daily_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev.filter(F.col("_ts") >= mid).drop("_ts").write.mode("append").parquet(path)
     return summing_serve(
-        spark.read.parquet(path),
+        read_parquet(spark, path),
         key_cols=["user_id", "day"],
         sum_cols=["value"],
     ).withColumnRenamed("value", "total_value")
@@ -1282,7 +1282,7 @@ def collapsing_view_click_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_collapsing(spark, path, key_cols=["user_id", "day"])
     ev.filter(F.col("_ts") >= mid).drop("_ts").write.mode("append").parquet(path)
     return collapsing_serve(
-        spark.read.parquet(path), key_cols=["user_id", "day"]
+        read_parquet(spark, path), key_cols=["user_id", "day"]
     ).withColumnRenamed("sign", "net_sign")
 
 
@@ -1346,7 +1346,7 @@ def versioned_collapsing_pending_cancels(
     # batch 2: the states the cancels were for (plus never-cancelled)
     states.write.mode("append").parquet(path)
     return collapsing_serve(
-        spark.read.parquet(path), key_cols=["user_id", "version"]
+        read_parquet(spark, path), key_cols=["user_id", "version"]
     ).withColumnRenamed("sign", "net_sign")
 
 
@@ -1811,10 +1811,10 @@ def skipindex_pruned_scans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def read_pruned(keep: list[str], schema: str) -> DataFrame:
         # a fully-pruned probe legitimately keeps ZERO files;
-        # spark.read.parquet(*[]) would raise instead of reading nothing
+        # read_parquet(spark, *[]) would raise instead of reading nothing
         if not keep:
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(*keep)
+        return read_parquet(spark, *keep)
 
     ev_path = os.path.join(root, "ev")
     ev = _t(spark, sf_dir, "events").select(

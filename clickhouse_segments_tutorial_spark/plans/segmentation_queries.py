@@ -32,7 +32,7 @@ from ..segmentation import (
 )
 from ..schemas import EVENTS
 from ..segmentation.spec import CORPUS_EVENTS
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from ..sources.writers import PARTITION_COL, append_clustered, apply_retention
 from .registry import QuerySpec
 
@@ -249,7 +249,7 @@ def retention_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the retention drop
         raise RuntimeError("fixed clock must actually expire partitions")
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col(PARTITION_COL).cast("string").alias("day"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )

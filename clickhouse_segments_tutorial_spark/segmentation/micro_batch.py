@@ -40,6 +40,7 @@ from pyspark.errors import AnalysisException
 
 from .spec import EventLog, SegmentSpec
 from ..operators.hll_state import accumulate_state, hll_merge, hll_merge_estimate
+from ..sources.catalog import read_parquet
 from ..sources.writers import (
     PARTITION_COL,
     append_clustered,
@@ -115,7 +116,7 @@ class MicroBatchSegmenter:
         if not os.path.exists(path):
             return None
         try:
-            return self.spark.read.parquet(path)
+            return read_parquet(self.spark, path)
         except AnalysisException:
             # Directory exists but holds no data files (e.g. every partition
             # aged out via retention, or only empty-batch markers) — treat as

@@ -10,7 +10,7 @@ from .bucketed import (
     state_table_prefix,
     write_bucketed,
 )
-from .catalog import Catalog, load_table
+from .catalog import Catalog, load_table, read_parquet
 from .database import SegmentDatabase
 from .json_ingest import read_json_rows
 from .zorder import append_zordered, zorder_key
@@ -26,6 +26,7 @@ __all__ = [
     "load_table",
     "newest_valid_pin",
     "read_json_rows",
+    "read_parquet",
     "read_table",
     "resolve_wave_counter",
     "state_table_prefix",

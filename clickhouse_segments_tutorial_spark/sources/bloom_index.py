@@ -36,7 +36,7 @@ Design (Spark-first, no sidecar service):
   comes from the FileIndex (``inputFiles()``), which launches NO job
   over the data: the probe's only Spark job is the sidecar read. Files
   missing from the sidecar are kept (unindexed data must never be
-  skipped). The returned path list feeds ``spark.read.parquet(*paths)``
+  skipped). The returned path list feeds ``read_parquet(spark, *paths)``
   with the ordinary filter on top (the filter stays — the index only
   SKIPS, semantics are the scan's).
 - **Append-friendly**: each ``index_files`` call indexes only files
@@ -59,6 +59,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import md5_hash60
+from .catalog import read_parquet
 
 _WORDS = 64  # bits per packed long
 
@@ -183,7 +184,7 @@ def index_files(
     new = [f for f in _data_files(spark, path) if f not in have]
     if not new:
         return 0
-    df = spark.read.parquet(*new).select(
+    df = read_parquet(spark, *new).select(
         F.input_file_name().alias("file"), F.col(data_col).alias("_v")
     ).filter(
         # NULL values never match an equality/token/substring probe, so
@@ -295,7 +296,7 @@ def pruned_paths(
     ``ngram=n`` probes the ngrambf sidecar with a SUBSTRING: every
     n-gram of ``value`` must be present (a fragment shorter than n has
     no grams and prunes nothing — the honest answer). The returned
-    list feeds ``spark.read.parquet(*paths)`` with the ordinary
+    list feeds ``read_parquet(spark, *paths)`` with the ordinary
     predicate on top.
 
     ``tokenized=True`` also accepts a LIST of tokens — the ClickHouse

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import read_parquet
+
 
 def write_bucketed(
     df: DataFrame,
@@ -117,7 +119,7 @@ def heal_bucketed_from_pins(
     if pin is None:
         return
     write_bucketed(
-        spark.read.parquet(pin),
+        read_parquet(spark, pin),
         table,
         key=key,
         buckets=buckets,
@@ -150,7 +152,7 @@ def compact_bucketed(
 
     state.write.mode("overwrite").parquet(pin_path)
     write_bucketed(
-        spark.read.parquet(pin_path),
+        read_parquet(spark, pin_path),
         table,
         key=key,
         buckets=buckets,

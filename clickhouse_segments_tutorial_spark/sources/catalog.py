@@ -10,17 +10,100 @@ explicit schema from :mod:`..schemas` lets Catalyst prune columns and push
 predicates into the parquet reader (check for ``PushedFilters`` in
 ``.explain``) — the Spark analog of ClickHouse primary-key range pruning
 (SURVEY.md §4).
+
+Every engine table read goes through :func:`read_parquet`, which hands
+Spark the table's schema so no schema-inference job runs per read.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import CORPUS_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# session confs that change the schema Spark infers from a parquet footer
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# (footer schema, footer key-value metadata, inference confs) -> the data
+# schema Spark inferred for a file with that footer. Keyed on the data,
+# never on the path: rewrite_table replaces a table in place, and a path
+# key would then serve the old schema. The value is a function of the key
+# alone, so sessions and tests in one process can share the entries; there
+# is one per distinct table schema.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _is_hidden(name: str) -> bool:
+    """Spark's file listing skips these (InMemoryFileIndex); '_' names
+    holding '=' are partition directories, not hidden."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _first_data_file(paths: tuple[str, ...]) -> str | None:
+    """The first data file under ``paths``, depth-first in name order, or
+    None when there is none (missing or non-local paths included)."""
+    for path in paths:
+        url = urlparse(path)
+        if url.scheme not in ("", "file"):
+            return None
+        local = unquote(url.path) if url.scheme else path
+        if os.path.isfile(local):
+            return local
+        for root, dirs, files in os.walk(local):
+            dirs[:] = sorted(d for d in dirs if not _is_hidden(d))
+            data = sorted(f for f in files if not _is_hidden(f))
+            if data:
+                return os.path.join(root, data[0])
+    return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Plain ``spark.read.parquet`` runs a Spark job to read one footer on
+    every call. Here pyarrow reads the footer of one data file in this
+    process (~0.1 ms), and the data schema Spark inferred for that footer
+    under the same inference confs is looked up; only a footer never seen
+    before pays the job, on that one file. Spark still discovers the
+    partition columns. A missing path, a directory with no data file and
+    an unreadable footer fall through to the plain read, so they raise
+    exactly as before. Safe to call from several threads.
+    """
+    try:
+        first = _first_data_file(paths)
+        meta = pq.read_metadata(first) if first is not None else None
+    except (OSError, pa.ArrowException):
+        meta = None
+    if meta is None:
+        return spark.read.parquet(*paths)
+    key = (
+        # the footer's full parquet schema (physical and logical types);
+        # repr's first line is the object's address
+        repr(meta.schema).partition("\n")[2],
+        # Spark restores its own types from the row metadata stored here
+        tuple(sorted((meta.metadata or {}).items())),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(first).schema
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[key] = schema
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -50,7 +133,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # instants; with the UTC session timezone the values match DuckDB's
     # naive interpretation exactly.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     declared = CORPUS_TABLES[name]
     for field in declared.fields:
         actual = df.schema[field.name].dataType if field.name in df.columns else None

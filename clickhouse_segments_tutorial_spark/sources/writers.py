@@ -24,6 +24,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .catalog import read_parquet
+
 PARTITION_COL = "part_yyyymmdd"
 
 
@@ -158,7 +160,7 @@ def compact_summing(
     shrinks storage. Non-key non-sum columns are not supported (CH
     keeps an arbitrary value there — a nondeterminism this engine
     refuses rather than replicates)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     extra = set(df.columns) - set(key_cols) - set(sum_cols)
     if extra:
         raise ValueError(
@@ -209,7 +211,7 @@ def compact_collapsing(
     cannot arise). Readers never rely on the merge: collapsing_serve
     computes the same net view over any mix of raw and folded rows,
     because sum(sign) is associative."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     folded = (
         df.groupBy(*key_cols)
         .agg(F.sum(F.col(sign_col)).cast(dict(df.dtypes)[sign_col]).alias(sign_col))
@@ -252,7 +254,7 @@ def compact_latest_wins(
     they always resolve latest-wins themselves (operators/latest_wins.py),
     mirroring the reference's read-side argMax
     (/root/reference/src/1-naive.test.ts:85)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     latest = (
         df.groupBy(key)
         .agg(F.max_by(F.struct("*"), F.col(order_by)).alias("row"))

@@ -51,6 +51,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.catalog import read_parquet
+
 
 class StreamingWaveGate:
     """File-source ingest gate driving a wave-state incremental operator.
@@ -174,7 +176,7 @@ class StreamingWaveGate:
         )
         if not parts:
             raise RuntimeError("no batches processed yet")
-        return self.spark.read.parquet(*parts)
+        return read_parquet(self.spark, *parts)
 
 
 class ContinuousWaveGate(StreamingWaveGate):
@@ -476,7 +478,7 @@ class ContinuousWaveGate(StreamingWaveGate):
                 if not os.path.exists(os.path.join(qpath, "_SUCCESS")):
                     return
                 path = qpath
-            self._admit(nxt, self.spark.read.parquet(path))
+            self._admit(nxt, read_parquet(self.spark, path))
             # persist the cursor BEFORE deleting the buffered files: a
             # crash between rmtree and a later save would otherwise
             # leave an admitted wave looking like a gap — expired with a

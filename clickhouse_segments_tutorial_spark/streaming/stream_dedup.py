@@ -36,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.catalog import read_parquet
+
 
 class StreamingDeduper:
     """File-source ingest gate: parquet docs appear in ``docs_dir``; each
@@ -91,4 +93,4 @@ class StreamingDeduper:
     def accepted(self) -> DataFrame:
         if not os.path.exists(self.accepted_path):
             raise RuntimeError("no batches processed yet")
-        return self.spark.read.parquet(self.accepted_path)
+        return read_parquet(self.spark, self.accepted_path)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.text import token_count
+from ..sources.catalog import read_parquet
 
 
 class StreamingQuotaGate:
@@ -152,4 +153,4 @@ class StreamingQuotaGate:
     def accepted(self) -> DataFrame:
         if not os.path.exists(self.accepted_path):
             raise RuntimeError("no batches processed yet")
-        return self.spark.read.parquet(self.accepted_path)
+        return read_parquet(self.spark, self.accepted_path)

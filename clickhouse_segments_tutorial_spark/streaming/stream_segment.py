@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..segmentation.spec import EventLog, SegmentSpec
 from ..operators.latest_wins import latest_value
+from ..sources.catalog import read_parquet
 
 
 class StreamingSegmenter:
@@ -177,7 +178,7 @@ class StreamingSegmenter:
         recover_rewrite(self.assignments_path)  # heal an interrupted compaction
         if not os.path.exists(self.assignments_path):
             raise RuntimeError("no batches processed yet")
-        assignments = self.spark.read.parquet(self.assignments_path)
+        assignments = read_parquet(self.spark, self.assignments_path)
         return (
             assignments.groupBy("user_id")
             .agg(latest_value("value", "version").alias("latest_value"))

@@ -1177,6 +1177,21 @@ def test_pq_codebooks_reject_indivisible_m(spark, sf_oracle):
         pq_codebooks(emb, m=7, k_codes=8, portable=False)
 
 
+def test_dec_array_lit_rejects_non_finite_entries(spark):
+    """inf/nan have no DECIMAL(18,6) value and are not SQL literals: the
+    literal builder names the bad entry instead of emitting ``infD``
+    and failing at parse time."""
+    import pytest as _pytest
+
+    from clickhouse_segments_tutorial_spark.operators.pq import _dec_array_lit
+
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with _pytest.raises(ValueError, match="non-finite codebook entry"):
+            _dec_array_lit([0.5, bad])
+    row = spark.range(1).select(_dec_array_lit([0.5, -1.25]).alias("a")).first()
+    assert [float(v) for v in row.a] == [0.5, -1.25]
+
+
 def test_pq_encode_partitioning_invariant(spark, sf_oracle):
     """Code assignment is per-vector independent and its tie-break fully
     specified (argmin round-6 d2, lowest code index), so the codes must
